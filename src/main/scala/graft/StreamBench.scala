@@ -72,11 +72,6 @@ object StreamBench {
 
     val includeExamples =
       sys.env.getOrElse("SPARK_GRAFT_EXAMPLES", "true").toBoolean
-    // SPARK_GRAFT_STREAM_MODE=chained benches the two-stateful
-    // FULL-payload emission (topEntitiesPayloadStreamChained) instead of
-    // the unified 4-family store pipeline — the other novel stateful
-    // shape worth a recorded number.
-    val mode = sys.env.getOrElse("SPARK_GRAFT_STREAM_MODE", "unified")
     // SPARK_GRAFT_ADJUST=global|sharded: run ingress under the Trill
     // DisorderPolicy.Adjust clamp (OP-19) before the aggregation —
     // `global` is the reference-faithful ONE-key clamp over the
@@ -110,32 +105,18 @@ object StreamBench {
       case _ => rawSrc
     }
     val t0 = System.nanoTime()
-    val q =
-      if (mode == "chained")
-        graft.stream.StreamingPipeline
-          .topEntitiesPayloadStreamChained(src)
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-            b.write.mode("overwrite").parquet(s"$store/ranks/batch=$id")
-          }
-          .option("checkpointLocation", ckpt)
-          .start()
-      else
-        graft.stream.StreamingPipeline.unifiedSink(
-            graft.stream.StreamingPipeline.unifiedAggStream(src,
-              includeExamples),
-            store)
-          .option("checkpointLocation", ckpt)
-          .start()
+    val q = graft.stream.StreamingPipeline.unifiedSink(
+        graft.stream.StreamingPipeline.unifiedAggStream(src,
+          includeExamples),
+        store)
+      .option("checkpointLocation", ckpt)
+      .start()
     q.processAllAvailable()
     q.stop()
     val sec = (System.nanoTime() - t0) / 1e9
     val stored =
-      if (mode == "chained")
-        spark.read.parquet(s"$store/ranks").count()
-      else
-        graft.stream.AggregateStore.read(spark, s"$store/counts").count()
-    println(f"""{"metric":"stream_tweets_per_sec","value":${n / sec}%.0f,"tweets":$n,"seconds":$sec%.1f,"count_windows":$stored,"examples":$includeExamples,"mode":"$mode","adjust":"$adjust"}""")
+      graft.stream.AggregateStore.read(spark, s"$store/counts").count()
+    println(f"""{"metric":"stream_tweets_per_sec","value":${n / sec}%.0f,"tweets":$n,"seconds":$sec%.1f,"count_windows":$stored,"examples":$includeExamples,"adjust":"$adjust"}""")
     spark.stop()
   }
 }

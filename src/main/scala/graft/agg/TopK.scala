@@ -166,107 +166,6 @@ class TopKTweets(k: Int)
     ExpressionEncoder[Seq[TweetExample]]()
 }
 
-/** A ranked entity carried through the second-level top-k (OP-28):
-  * the per-window output payload of `GetTopItems`
-  * (reference TweetGateCore/Query.cs:152-168). */
-case class TopKEntity(weight: Double, entity: String, tweetCount: Long)
-
-/**
- * OP-26/28 second level: bounded top-k over whole entity rows — same
- * bounded-buffer/merge strategy as [[TopKIds]], ranked by weight DESC with
- * entity ASC tie-break. Being an `Aggregator`, it is legal as the second
- * stateful operator of a chained streaming query, which lets the full
- * two-level pipeline (per-entity agg → per-window top-k) run incrementally
- * in ONE streaming query (Spark ≥3.4 multiple-stateful-operator support)
- * instead of ranking in foreachBatch.
- */
-class TopKEntities(k: Int)
-    extends Aggregator[TopKEntity, Seq[TopKEntity], Seq[TopKEntity]] {
-  require(k > 0)
-
-  private val ord: Ordering[TopKEntity] =
-    Ordering.by((t: TopKEntity) => (-t.weight, t.entity))
-
-  override def zero: Seq[TopKEntity] = Vector.empty
-
-  override def reduce(b: Seq[TopKEntity], a: TopKEntity): Seq[TopKEntity] =
-    if (b.size < k) insertSorted(b, a)
-    else if (ord.lt(a, b.last)) insertSorted(b.init, a)
-    else b
-
-  private def insertSorted(b: Seq[TopKEntity],
-      a: TopKEntity): Seq[TopKEntity] = {
-    val i = b.indexWhere(x => ord.gt(x, a)) match {
-      case -1 => b.size
-      case n  => n
-    }
-    (b.take(i) :+ a) ++ b.drop(i)
-  }
-
-  override def merge(b1: Seq[TopKEntity],
-      b2: Seq[TopKEntity]): Seq[TopKEntity] =
-    (b1 ++ b2).sorted(ord).take(k)
-
-  override def finish(r: Seq[TopKEntity]): Seq[TopKEntity] = r
-
-  override def bufferEncoder: Encoder[Seq[TopKEntity]] =
-    ExpressionEncoder[Seq[TopKEntity]]()
-  override def outputEncoder: Encoder[Seq[TopKEntity]] =
-    ExpressionEncoder[Seq[TopKEntity]]()
-}
-
-/** A ranked entity WITH its full example payloads, carried through the
-  * second-level top-k — the complete per-window record the reference's
-  * observables emit (`TopMentions`/`TopHashTags` with
-  * `TopTweets: TweetDescription[]`, AggregatePayloads.cs:29-42, produced
-  * by `GetTopItems`, Query.cs:152-168). */
-case class TopKEntityPayload(weight: Double, entity: String,
-    tweetCount: Long, topTweets: Seq[TweetExample])
-
-/**
- * [[TopKEntities]] carrying the payloads: bounded top-k over entity rows
- * that each hold their (already k-bounded) example structs — the second
- * stateful level of the FULL-payload chained streaming query. State per
- * rank window is k entities x k examples, so the complete reference
- * emission (top-10 entities, each with 10 example tweets) runs
- * incrementally end-to-end with bounded state at both levels.
- */
-class TopKEntitiesPayload(k: Int) extends Aggregator[TopKEntityPayload,
-    Seq[TopKEntityPayload], Seq[TopKEntityPayload]] {
-  require(k > 0)
-
-  private val ord: Ordering[TopKEntityPayload] =
-    Ordering.by((t: TopKEntityPayload) => (-t.weight, t.entity))
-
-  override def zero: Seq[TopKEntityPayload] = Vector.empty
-
-  override def reduce(b: Seq[TopKEntityPayload],
-      a: TopKEntityPayload): Seq[TopKEntityPayload] =
-    if (b.size < k) insertSorted(b, a)
-    else if (ord.lt(a, b.last)) insertSorted(b.init, a)
-    else b
-
-  private def insertSorted(b: Seq[TopKEntityPayload],
-      a: TopKEntityPayload): Seq[TopKEntityPayload] = {
-    val i = b.indexWhere(x => ord.gt(x, a)) match {
-      case -1 => b.size
-      case n  => n
-    }
-    (b.take(i) :+ a) ++ b.drop(i)
-  }
-
-  override def merge(b1: Seq[TopKEntityPayload],
-      b2: Seq[TopKEntityPayload]): Seq[TopKEntityPayload] =
-    (b1 ++ b2).sorted(ord).take(k)
-
-  override def finish(r: Seq[TopKEntityPayload]): Seq[TopKEntityPayload] = r
-
-  override def bufferEncoder: Encoder[Seq[TopKEntityPayload]] =
-    ExpressionEncoder[Seq[TopKEntityPayload]]()
-  override def outputEncoder: Encoder[Seq[TopKEntityPayload]] =
-    ExpressionEncoder[Seq[TopKEntityPayload]]()
-}
-
 object TopK {
   /** Untyped (DataFrame) form: `topKIds(10)(col("value"), col("id"))`. */
   def topKIds(k: Int): (Column, Column) => Column = {
@@ -289,21 +188,5 @@ object TopK {
       : (Column, Column, Column, Column, Column, Column) => Column = {
     val fn = udaf(new TopKTweets(k), ExpressionEncoder[KeyedExample]())
     (key, fc, id, text, sn, oid) => fn(key, fc, id, text, sn, oid)
-  }
-
-  /** Untyped form of [[TopKEntities]]:
-    * `topKEntities(10)(col("weight"), col("entity"), col("cnt"))`. */
-  def topKEntities(k: Int): (Column, Column, Column) => Column = {
-    val fn = udaf(new TopKEntities(k), ExpressionEncoder[TopKEntity]())
-    (weight, entity, cnt) => fn(weight, entity, cnt)
-  }
-
-  /** Untyped form of [[TopKEntitiesPayload]]: the 4th column is the
-    * entity's `array<struct>` example payloads. */
-  def topKEntitiesPayload(k: Int)
-      : (Column, Column, Column, Column) => Column = {
-    val fn = udaf(new TopKEntitiesPayload(k),
-      ExpressionEncoder[TopKEntityPayload]())
-    (weight, entity, cnt, tops) => fn(weight, entity, cnt, tops)
   }
 }

@@ -1610,11 +1610,10 @@ object StreamingPipeline {
   def sourceOverlapFromState(spark: SparkSession, pairsPath: String,
       key: String = "source"): DataFrame =
     graft.ops.Dedup.keyOverlapFromPairs(
-      graft.ops.Reuse.shared(
-        // Project away the batch=<id> partition column BEFORE distinct,
-        // or a pair two batches both contributed would survive twice.
-        spark.read.parquet(pairsPath).select(col(key), col("h"))
-          .distinct()), key)
+      // Project away the batch=<id> partition column BEFORE distinct,
+      // or a pair two batches both contributed would survive twice.
+      spark.read.parquet(pairsPath).select(col(key), col("h")).distinct(),
+      key)
 
   /**
    * Streaming twin of `Splits.shardAssign` (ext52): a continuous
@@ -1858,20 +1857,6 @@ object StreamingPipeline {
       .agg(count("*").as("cnt"))
       .select(col("window.end").cast("long").as("window_end"), col("cnt"))
 
-  /** Per-hashtag hopping-window aggregate stream (OP-21/23/24). */
-  def hashtagAggStream(tweets: DataFrame): DataFrame =
-    tweets
-      .withWatermark("ts", Watermark)
-      .filter(size(col("hashtags")) > 0)           // OP-11
-      .select(col("ts"), explode(col("hashtags")).as("entity"), // OP-16
-        col("followerCount"))
-      .groupBy(window(col("ts"), Windows.WindowSize, Windows.HopSize),
-        col("entity"))
-      .agg(count("*").as("tweet_count"),
-        sum(col("followerCount")).as("follower_sum"))
-      .select(col("window.end").cast("long").as("window_end"),
-        col("entity"), col("tweet_count"), col("follower_sum"))
-
   /**
    * The full pipeline of the reference in ONE stateful aggregation
    * (OP-17/18's Multicast + the 4 subscriptions of
@@ -1978,132 +1963,25 @@ object StreamingPipeline {
         } finally b.unpersist()
       }
 
-  /** `maxFilesPerTrigger` default 8: starting against an existing
-    * backlog directory must not admit the whole history into one
-    * micro-batch (the 500k single-batch OOM lesson — see unifiedSink's
-    * persist note); live tailing is unaffected (per-trigger arrivals
-    * are few files). */
-  def runUnified(spark: SparkSession, inputDir: String, storeRoot: String,
-      checkpoint: String,
-      maxFilesPerTrigger: Option[Int] = Some(8),
-      adjust: Boolean = false): StreamingQuery = {
-    val src = tweetStream(spark, inputDir, maxFilesPerTrigger)
-    // `adjust` mirrors [[run]]: Trill Adjust(5 s) ingress for the
-    // unified 4-family pipeline (Query.cs:27-31 applies to the SAME
-    // multicast input both paths consume).
-    unifiedSink(unifiedAggStream(
-        if (adjust) adjustDisorderStreamAuto(src) else src), storeRoot)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
-  }
+  /** Files admitted per trigger: starting against an existing backlog
+    * directory must not admit the whole history into one micro-batch
+    * (the 500k single-batch OOM lesson — see unifiedSink's persist
+    * note); live tailing is unaffected (per-trigger arrivals are few
+    * files). */
+  private val MaxFilesPerTrigger = 8
 
-  /**
-   * OP-28 as a CHAINED streaming query (Spark ≥3.4 multiple stateful
-   * operators): per-entity hopping aggregate → 1-min tumbling top-k over
-   * entities — the exact two-level shape of the reference's
-   * `GetTopItems` (Query.cs:152-168: re-window the aggregate stream,
-   * TopK(FollowerCountSum, 10)). The second level uses the bounded
-   * [[graft.agg.TopKEntities]] aggregate, so both levels run
-   * incrementally in one query — no foreachBatch ranking, state bounded
-   * at k entities per window. `window_time(window)` keeps event-time
-   * lineage so the watermark propagates through both stateful operators.
-   */
-  def topEntitiesStreamChained(tweets: DataFrame,
-      n: Int = Windows.TopN): DataFrame = {
-    val topk = graft.agg.TopK.topKEntities(n)
-    tweets
-      .withWatermark("ts", Watermark)
-      .filter(size(col("hashtags")) > 0)
-      .select(col("ts"), explode(col("hashtags")).as("entity"),
-        col("followerCount"))
-      .groupBy(window(col("ts"), Windows.WindowSize, Windows.HopSize),
-        col("entity"))
-      .agg(count("*").as("tweet_count"),
-        sum(col("followerCount")).cast("double").as("follower_sum"))
-      .groupBy(window(window_time(col("window")), Windows.HopSize))
-      .agg(topk(col("follower_sum"), col("entity"), col("tweet_count"))
-        .as("top_entities"))
-      .select(col("window.end").cast("long").as("rank_window_end"),
-        col("top_entities"))
-  }
-
-  /**
-   * [[topEntitiesStreamChained]] with the FULL example payloads — the
-   * complete reference emission shape, end-to-end incremental: per
-   * hopping window the per-hashtag multi-agg carries its k example
-   * `TweetDescription` structs (bounded [[graft.agg.TopKTweets]], OP-26/
-   * 27 fused), and the 1-min tumbling second level ranks whole
-   * entity+payload rows (bounded [[graft.agg.TopKEntitiesPayload]]) —
-   * exactly `GetTopItems` over `TopHashTags{..., TopTweets}`
-   * (Query.cs:152-168 over AggregatePayloads.cs:29-42), with state
-   * bounded at k entities x k examples per rank window and both levels
-   * in ONE streaming query (no foreachBatch ranking).
-   */
-  def topEntitiesPayloadStreamChained(tweets: DataFrame,
-      n: Int = Windows.TopN): DataFrame = {
-    val topkT = graft.agg.TopK.topKTweets(Windows.ExamplesPerEntity)
-    val topkE = graft.agg.TopK.topKEntitiesPayload(n)
-    tweets
-      .withWatermark("ts", Watermark)
-      .filter(size(col("hashtags")) > 0)
-      .select(col("ts"), explode(col("hashtags")).as("entity"),
-        col("followerCount"), col("id"), col("text"), col("screenName"),
-        col("originalTweetId"),
-        // OP-27 dedupe key (see unifiedAggStream)
-        when(col("originalTweetId") =!= -1L, col("originalTweetId"))
-          .otherwise(col("id")).as("dedupe_key"))
-      .groupBy(window(col("ts"), Windows.WindowSize, Windows.HopSize),
-        col("entity"))
-      .agg(count("*").as("tweet_count"),
-        sum(col("followerCount")).cast("double").as("follower_sum"),
-        topkT(col("dedupe_key"), col("followerCount"), col("id"),
-          col("text"), col("screenName"), col("originalTweetId"))
-          .as("top_tweets"))
-      .groupBy(window(window_time(col("window")), Windows.HopSize))
-      .agg(topkE(col("follower_sum"), col("entity"), col("tweet_count"),
-        col("top_tweets")).as("top_entities"))
-      .select(col("window.end").cast("long").as("rank_window_end"),
-        col("top_entities"))
-  }
-
-  /** Hopping tweet-count stream (OP-22, the `counts` CF). */
-  def countStream(tweets: DataFrame): DataFrame =
-    tweets
-      .withWatermark("ts", Watermark)
-      .groupBy(window(col("ts"), Windows.WindowSize, Windows.HopSize))
-      .agg(count("*").as("cnt"))
-      .select(col("window.end").cast("long").as("window_end"), col("cnt"))
-
-  /**
-   * Sink (OP-32): rank top-N inside each micro-batch, then append to a
-   * parquet store partitioned by window_end date — the analog of the
-   * reference's per-window RocksDB keys: serving range scans prune
-   * partitions instead of seeking an LSM iterator.
-   */
-  def rankedSink(agg: DataFrame, storePath: String,
-      n: Int = Windows.TopN): DataStreamWriter[org.apache.spark.sql.Row] =
-    agg.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        AggregateStore.writeRanked(batch, storePath, n, batchId)
-      }
-
-  /** End-to-end assembly: source dir → ranked parquet store. */
-  /** The reference's live pipeline end to end. `adjust = true` runs
-    * ingress under [[adjustDisorderStream]] — Trill's
+  /** The reference's live pipeline end to end: source dir → the four
+    * ranked store families under `storeRoot`. `adjust = true` runs
+    * ingress under [[adjustDisorderStreamAuto]] — Trill's
     * `DisorderPolicy.Adjust(5 s)`, the policy the reference actually
     * ingests with (Query.cs:27-31) — so an out-of-bound late tweet is
     * LIFTED into the trailing window instead of silently dropped;
-    * `adjust = false` keeps plain watermark Drop semantics (the default
-    * of rounds 1-12, left as default so existing twins/oracles are
-    * unchanged; the in-bound replay fixture makes the two identical
-    * there). */
-  def run(spark: SparkSession, inputDir: String, storePath: String,
+    * `adjust = false` keeps plain watermark Drop semantics. */
+  def runUnified(spark: SparkSession, inputDir: String, storeRoot: String,
       checkpoint: String, adjust: Boolean = false): StreamingQuery = {
-    val src = tweetStream(spark, inputDir)
-    rankedSink(hashtagAggStream(
-        if (adjust) adjustDisorderStreamAuto(src) else src), storePath)
+    val src = tweetStream(spark, inputDir, Some(MaxFilesPerTrigger))
+    unifiedSink(unifiedAggStream(
+        if (adjust) adjustDisorderStreamAuto(src) else src), storeRoot)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime("1 second"))
       .start()
@@ -2219,6 +2097,15 @@ object AggregateStore {
     * consistent instead of rejecting a mixed layout. */
   val CompactedBatchId: Long = -1L
 
+  /** Spec-only probe seam (the GifFrameDecoder.decodeProbe discipline):
+    * invoked at the swap's two in-between states — "aside" (live dir
+    * renamed to `_precompact`, nothing at the store path yet) and
+    * "promoted" (compacted dir in place, `_precompact` not yet
+    * deleted) — so the reader-vs-compaction consistency contract is
+    * testable DETERMINISTICALLY instead of by racing threads.
+    * Production pays one volatile read per state. */
+  @volatile var compactProbe: Option[String => Unit] = None
+
   /** Compact a store path: streaming writes produce one `batch=<id>` dir
     * with small files per micro-batch; OFFLINE compaction (stream stopped)
     * folds all batches into a single `batch=-1` partition and rewrites
@@ -2241,15 +2128,6 @@ object AggregateStore {
     * copy+delete); on an object store use a manifest-based table format
     * instead. The filesystem is resolved FROM the store path, so a
     * qualified non-default path (hdfs://other-cluster/...) works. */
-  /** Spec-only probe seam (the GifFrameDecoder.decodeProbe discipline):
-    * invoked at the swap's two in-between states — "aside" (live dir
-    * renamed to `_precompact`, nothing at the store path yet) and
-    * "promoted" (compacted dir in place, `_precompact` not yet
-    * deleted) — so the reader-vs-compaction consistency contract is
-    * testable DETERMINISTICALLY instead of by racing threads.
-    * Production pays one volatile read per state. */
-  @volatile var compactProbe: Option[String => Unit] = None
-
   def compact(spark: SparkSession, path: String,
       filesPerPartition: Int = 1): Unit = {
     val base = path.stripSuffix("/")

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Tables
@@ -39,44 +40,6 @@ class StreamingSpec extends TestBase {
       """{"id":9998,"text":"dropped: empty ts","timestamp_ms":"","entities":{"hashtags":[],"user_mentions":[]},"user":{"followers_count":1,"screen_name":"x"}}""",
       """{"id":9997,"text":"dropped: zero ts","timestamp_ms":"0","entities":{"hashtags":[],"user_mentions":[]},"user":{"followers_count":1,"screen_name":"x"}}""",
       "not json at all")
-  }
-
-  test("streaming hashtag aggregate == batch equivalent on replay fixture") {
-    val dir = Files.createTempDirectory("graft-replay").toFile
-    val store = Files.createTempDirectory("graft-store").toString
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
-    Files.write(new java.io.File(dir, "part-0.jsonl").toPath,
-      fixtureLines.mkString("\n").getBytes)
-
-    val q = StreamingPipeline.run(spark, dir.toString, store, ckpt)
-    q.processAllAvailable()
-    q.stop()
-
-    val streamed = AggregateStore.read(spark, store)
-      .select("window_end", "entity", "tweet_count", "follower_sum", "rank")
-
-    val batchTweets = graft.ingest.Tables.projectTweets(
-      Tables.tweetsFromFile(spark, dir.toString + "/part-0.jsonl"))
-    val batchAgg = batchTweets
-      .filter(size(col("hashtags")) > 0)
-      .select(col("ts"), explode(col("hashtags")).as("entity"),
-        col("followerCount"))
-      .groupBy(window(col("ts"), "10 minutes", "1 minute"), col("entity"))
-      .agg(count("*").as("tweet_count"),
-        sum("followerCount").as("follower_sum"))
-      .select(col("window.end").cast("long").as("window_end"),
-        col("entity"), col("tweet_count"), col("follower_sum"))
-    val batchRanked = graft.agg.Windows.rankTopEntities(batchAgg)
-      .select("window_end", "entity", "tweet_count", "follower_sum", "rank")
-
-    // Streaming append-mode only emits windows whose watermark has
-    // expired; compare on the windows the stream emitted.
-    val emitted = streamed.select("window_end").distinct()
-    val batchOnEmitted = batchRanked.join(emitted, "window_end")
-    assert(streamed.count() > 0, "stream emitted nothing")
-    assert(streamed.exceptAll(batchOnEmitted).count() == 0 &&
-      batchOnEmitted.exceptAll(streamed).count() == 0,
-      "streaming and batch results differ on emitted windows")
   }
 
   test("unified 4-family pipeline + repl serving (OP-17/23/24/25/32/36-41)") {
@@ -483,102 +446,7 @@ class StreamingSpec extends TestBase {
       expected.size)
   }
 
-  test("chained two-level stateful top-k == batch rank (OP-28, Spark>=3.4)") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-replay4").toFile
-    Files.write(new java.io.File(dir, "part-0.jsonl").toPath,
-      fixtureLines.mkString("\n").getBytes)
-
-    val out = StreamingPipeline.topEntitiesStreamChained(
-      StreamingPipeline.tweetStream(spark, dir.toString), 2)
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("chained").start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("chained")
-      .select(col("rank_window_end"),
-        transform(col("top_entities"), e => e.getField("entity"))
-          .as("entities"))
-    assert(streamed.count() > 0, "chained query emitted nothing")
-
-    val batchTweets = graft.ingest.Tables.projectTweets(
-      Tables.tweetsFromFile(spark, dir.toString + "/part-0.jsonl"))
-    val batchAgg = batchTweets
-      .filter(size(col("hashtags")) > 0)
-      .select(col("ts"), explode(col("hashtags")).as("entity"),
-        col("followerCount"))
-      .groupBy(window(col("ts"), "10 minutes", "1 minute"), col("entity"))
-      .agg(sum("followerCount").cast("double").as("follower_sum"))
-      .select(col("window.end").cast("long").as("rank_window_end"),
-        col("entity"), col("follower_sum"))
-    val batchTop = graft.agg.Windows.rankTopEntities(
-        batchAgg.withColumnRenamed("rank_window_end", "window_end"), 2)
-      .groupBy(col("window_end").as("rank_window_end"))
-      .agg(collect_list(struct(col("rank"), col("entity"))).as("re"))
-      .select(col("rank_window_end"),
-        transform(array_sort(col("re")), x => x.getField("entity"))
-          .as("entities"))
-
-    val joined = streamed.join(batchTop, "rank_window_end")
-    assert(joined.count() == streamed.count())
-    assert(joined.filter(streamed("entities") =!= batchTop("entities"))
-      .count() == 0, "chained streaming top-k differs from batch rank")
-  }
-
-  test("chained two-level stateful top-k with FULL payloads == batch " +
-      "topEntityPayloads (the complete reference emission, r12)") {
-    val dir = Files.createTempDirectory("graft-replay4p").toFile
-    Files.write(new java.io.File(dir, "part-0.jsonl").toPath,
-      fixtureLines.mkString("\n").getBytes)
-
-    val out = StreamingPipeline.topEntitiesPayloadStreamChained(
-      StreamingPipeline.tweetStream(spark, dir.toString), 2)
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("chainedp").start()
-    q.processAllAvailable()
-    q.stop()
-
-    def canon(c: org.apache.spark.sql.Column) = transform(c, t => struct(
-      t.getField("id").as("id"),
-      t.getField("followerCount").as("followerCount"),
-      t.getField("text").as("text"),
-      t.getField("screenName").as("screenName"),
-      t.getField("originalTweetId").as("originalTweetId")))
-    val streamed = spark.table("chainedp")
-      .select(col("rank_window_end"),
-        transform(col("top_entities"), e => struct(
-          e.getField("entity").as("entity"),
-          e.getField("tweetCount").as("tweet_count"),
-          e.getField("weight").cast("long").as("fsum"),
-          canon(e.getField("topTweets")).as("tt"))).as("ents"))
-    assert(streamed.count() > 0, "payload chained query emitted nothing")
-    // non-vacuous: payloads actually ride through the second level
-    assert(streamed.filter(size(element_at(col("ents"), 1)
-      .getField("tt")) > 1).count() > 0,
-      "no emitted entity carried more than one example through level 2")
-
-    val projected = graft.ingest.Tables.projectTweets(
-      Tables.tweetsFromFile(spark, dir.toString + "/part-0.jsonl"))
-    val bp = graft.agg.Payloads.topEntityPayloads(
-      projected, col("hashtags"), topN = 2)
-    val batchArr = bp.groupBy(col("window_end").as("rank_window_end"))
-      .agg(array_sort(collect_list(struct(col("rank"), struct(
-        col("entity").as("entity"),
-        col("tweet_count").as("tweet_count"),
-        col("followerCountSum").cast("long").as("fsum"),
-        canon(col("topTweets")).as("tt")).as("e")))).as("re"))
-      .select(col("rank_window_end"),
-        transform(col("re"), x => x.getField("e")).as("ents"))
-
-    val joined = streamed.join(batchArr, "rank_window_end")
-    assert(joined.count() == streamed.count())
-    assert(joined.filter(streamed("ents") =!= batchArr("ents"))
-      .count() == 0,
-      "chained full-payload streaming differs from batch topEntityPayloads")
-  }
-
   test("restart from checkpoint resumes without loss or duplication") {
-    import spark.implicits._
     val dir = Files.createTempDirectory("graft-resume").toFile
     val store = Files.createTempDirectory("graft-rstore").toString
     val ckpt = Files.createTempDirectory("graft-rckpt").toString
@@ -586,29 +454,85 @@ class StreamingSpec extends TestBase {
     Files.write(new java.io.File(dir, "b1.jsonl").toPath,
       first.mkString("\n").getBytes)
 
-    val q1 = StreamingPipeline.run(spark, dir.toString, store, ckpt)
+    val q1 = StreamingPipeline.runUnified(spark, dir.toString, store, ckpt)
     q1.processAllAvailable()
+    val lastBatchBeforeStop = q1.lastProgress.batchId
     q1.stop() // simulate shutdown
 
     Files.write(new java.io.File(dir, "b2.jsonl").toPath,
       second.mkString("\n").getBytes)
-    val q2 = StreamingPipeline.run(spark, dir.toString, store, ckpt)
+    val q2 = StreamingPipeline.runUnified(spark, dir.toString, store, ckpt)
     q2.processAllAvailable()
     q2.stop()
 
-    val streamed = AggregateStore.read(spark, store)
-      .select("window_end", "entity", "tweet_count", "follower_sum", "rank")
-    // hashtagAggStream works on a batch frame too (watermark is a no-op)
-    val batchAgg = graft.agg.Windows.rankTopEntities(
-      StreamingPipeline.hashtagAggStream(graft.ingest.Tables.projectTweets(
-        Tables.tweetsFromFile(spark, dir.toString))))
-      .select("window_end", "entity", "tweet_count", "follower_sum", "rank")
-    val emitted = streamed.select("window_end").distinct()
-    val expect = batchAgg.join(emitted, "window_end")
-    assert(streamed.count() > 0)
-    assert(streamed.exceptAll(expect).count() == 0 &&
-      expect.exceptAll(streamed).count() == 0,
-      "resumed stream diverges from batch on emitted windows")
+    val projected = Tables.projectTweets(
+      Tables.tweetsFromFile(spark, dir.toString))
+    def stored(kind: String) = AggregateStore.read(spark, s"$store/$kind")
+    // every family compares on the windows the stream emitted (append
+    // mode emits a window once the watermark has passed it)
+    def assertSame(kind: String, streamed: DataFrame,
+        batch: DataFrame): Unit = {
+      val expect = batch.join(
+        stored(kind).select("window_end").distinct(), "window_end")
+      assert(streamed.count() > 0, s"$kind: stream emitted nothing")
+      assert(streamed.exceptAll(expect).isEmpty &&
+        expect.exceptAll(streamed).isEmpty,
+        s"resumed stream diverges from batch on emitted $kind windows")
+    }
+
+    assertSame("counts", stored("counts").select("window_end", "cnt"),
+      graft.agg.Windows.hoppingCounts(projected))
+    def canon(c: Column) = transform(c, t => struct(
+      t.getField("id").as("id"),
+      t.getField("followerCount").as("followerCount"),
+      t.getField("text").as("text"),
+      t.getField("screenName").as("screenName"),
+      t.getField("originalTweetId").as("originalTweetId")))
+    for (kind <- Seq("hashtags", "mentions"))
+      assertSame(kind,
+        stored(kind).select(col("window_end"), col("entity"),
+          col("tweet_count"), col("follower_sum"),
+          col("rank").cast("long").as("rank"),
+          canon(col("top_tweets")).as("tt")),
+        graft.agg.Payloads.topEntityPayloads(projected, col(kind))
+          .select(col("window_end"), col("entity"), col("tweet_count"),
+            col("followerCountSum").as("follower_sum"), col("rank"),
+            canon(col("topTweets")).as("tt")))
+    // retweets group by the original id (no example dedupe): stats,
+    // representative text and rank against the batch entity aggregate
+    assertSame("retweets",
+      stored("retweets").select(col("window_end"), col("entity"),
+        col("tweet_count"), col("follower_sum"), col("max_text"),
+        col("rank")),
+      graft.agg.Windows.rankTopEntities(graft.agg.Windows.entityWindowAgg(
+          projected.filter(col("originalTweetId") =!= -1L),
+          col("originalTweetId").cast("string"), col("followerCount"),
+          extra = Seq(max(col("text")).as("max_text"))))
+        .select(col("window_end"), col("entity"), col("tweet_count"),
+          col("follower_sum").cast("long").as("follower_sum"),
+          col("max_text"), col("rank")))
+
+    // the restart is real: windows spanning the stop point were emitted,
+    // and the resumed query wrote under fresh batch ids
+    val stopSec = Tables.projectTweets(Tables.tweetsFromFile(spark,
+        new java.io.File(dir, "b1.jsonl").toString))
+      .agg(max(col("ts")).cast("long")).head().getLong(0)
+    assert(stored("counts").filter(col("window_end") > stopSec &&
+      col("window_end") - 600L <= stopSec).count() > 0,
+      "no emitted window spans the restart")
+    assert(stored("counts").filter(col("batch") > lastBatchBeforeStop)
+      .count() > 0, "the resumed query emitted nothing")
+    // a replayed batch overwrites its own batch=<id> dir, so no window
+    // row lands in two batch directories
+    for ((kind, key) <- Seq("hashtags" -> Seq("window_end", "entity"),
+        "mentions" -> Seq("window_end", "entity"),
+        "retweets" -> Seq("window_end", "entity"),
+        "counts" -> Seq("window_end"))) {
+      val dups = stored(kind).groupBy(key.map(col): _*)
+        .agg(countDistinct(col("batch")).as("n_batches"))
+        .filter(col("n_batches") > 1)
+      assert(dups.isEmpty, s"$kind rows duplicated across batch dirs")
+    }
   }
 
   test("all-time content dedup drops a cross-batch re-crawl; earlier " +
@@ -717,7 +641,7 @@ class StreamingSpec extends TestBase {
     Files.write(new java.io.File(dir, "b1.jsonl").toPath,
       (0 until 50).map(i => line(i, base + i * 60000L))
         .mkString("\n").getBytes)
-    val q = StreamingPipeline.run(spark, dir.toString, store, ckpt)
+    val q = StreamingPipeline.runUnified(spark, dir.toString, store, ckpt)
     q.processAllAvailable()
     Files.write(new java.io.File(dir, "b2.jsonl").toPath,
       Seq(line(999, base + 1000L)).mkString("\n").getBytes) // 30+ min late
@@ -727,7 +651,7 @@ class StreamingSpec extends TestBase {
     // Trill would ADJUST the late row into bounds; Spark DROPS it
     // (SURVEY.md §7.3 documented delta). The late tweet (id 999, weight 1
     // in window ending base+600s) must not appear in streamed output.
-    val streamed = graft.stream.AggregateStore.read(spark, store)
+    val streamed = AggregateStore.read(spark, s"$store/hashtags")
     val firstWindowEnd = base / 1000 + 600
     val streamedFirst = streamed
       .filter(col("window_end") === firstWindowEnd)
@@ -3066,8 +2990,8 @@ class StreamingSpec extends TestBase {
       val dir = Files.createTempDirectory("graft-adj-run").toFile
       val store = Files.createTempDirectory("graft-adj-store").toString
       val ckpt = Files.createTempDirectory("graft-adj-ckpt").toString
-      val q = StreamingPipeline.run(spark, dir.toString, store, ckpt,
-        adjust = adjust)
+      val q = StreamingPipeline.runUnified(spark, dir.toString, store,
+        ckpt, adjust = adjust)
       def feed(name: String, lines: Seq[String]): Unit = {
         Files.write(new java.io.File(dir, name).toPath,
           lines.mkString("\n").getBytes)
@@ -3082,7 +3006,7 @@ class StreamingSpec extends TestBase {
       feed("b3.jsonl", Seq(line(4, base + 2000000L)))
       q.stop()
       import spark.implicits._
-      AggregateStore.read(spark, store)
+      AggregateStore.read(spark, s"$store/hashtags")
         .filter(col("entity") === "x")
         .select("window_end", "tweet_count")
         .as[(Long, Long)].collect().toMap

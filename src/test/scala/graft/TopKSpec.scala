@@ -153,29 +153,6 @@ class TopKSpec extends TestBase {
       "TopKTweets result depends on partitioning")
   }
 
-  // ---- TopKEntities / TopKEntitiesPayload: second-level rank laws ----
-
-  test("TopKEntitiesPayload: merge of any split equals whole; bounded; " +
-      "payload arrays ride untouched") {
-    import graft.agg.{TopKEntityPayload, TopKEntitiesPayload, TweetExample}
-    val agg = new TopKEntitiesPayload(3)
-    def ex(n: Long) = Seq(TweetExample(n, n, s"t$n", s"u$n", -1L))
-    val entGen = Gen.listOf(for {
-      w <- Gen.chooseNum(0L, 10L)
-      e <- Gen.chooseNum(0, 6)
-    } yield TopKEntityPayload(w.toDouble, s"e$e", w, ex(w)))
-    def ref(xs: Seq[TopKEntityPayload]): Seq[TopKEntityPayload] =
-      xs.sortBy(t => (-t.weight, t.entity)).take(3)
-    checkProp(Prop.forAll(entGen, Gen.chooseNum(0, 100)) { (xs, cut) =>
-      val (l, r) = xs.splitAt(cut % (xs.size + 1))
-      val whole = xs.foldLeft(agg.zero)(agg.reduce)
-      val lb = l.foldLeft(agg.zero)(agg.reduce)
-      val rb = r.foldLeft(agg.zero)(agg.reduce)
-      whole.size <= 3 && agg.finish(whole) == ref(xs) &&
-        agg.merge(lb, rb) == whole && agg.merge(rb, lb) == whole
-    })
-  }
-
   test("udaf parity with built-in sort_array composite on events") {
     val ev = Tables.events(spark, sf("sf0.001"))
     val topk = TopK.topKIds(5)
